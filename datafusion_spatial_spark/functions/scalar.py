@@ -290,11 +290,11 @@ def st_bbox(col: Column | str, meta: GeometryMeta) -> Column:
     return _st_bbox_build(col, meta)
 
 
-def _st_bbox_build(col: Column, meta: GeometryMeta) -> Column:
+def _st_bbox_build(col: Column, meta: GeometryMeta, bbox_udf=None) -> Column:
     if meta.is_wkb:
         # a pandas struct UDF can't emit a NULL struct (only null fields) —
         # normalize all-null rows to a NULL struct here
-        b = _wkb_bbox_udf(col)
+        b = (bbox_udf or _wkb_bbox_udf)(col)
         return F.when(b["xmax"].isNull(), F.lit(None).cast(_BBOX_TYPE)).otherwise(b)
     col, meta = to_separated(col, meta)
     coords = _native_coords(col, meta)

@@ -42,7 +42,11 @@ from datafusion_spatial_spark.functions.predicates import (
     st_within,
 )
 from datafusion_spatial_spark.exprcache import cached_columns
-from datafusion_spatial_spark.functions.scalar import st_bbox
+from datafusion_spatial_spark.functions.scalar import (
+    _st_bbox_build,
+    _wkb_bbox_udf,
+    st_bbox,
+)
 from datafusion_spatial_spark.meta import GeometryMeta
 
 _PREDICATES = {
@@ -54,6 +58,17 @@ _PREDICATES = {
     "covers": st_covers,
     "coveredby": st_coveredby,
 }
+
+
+# A deterministic bbox UDF would run twice per join side: Catalyst pushes
+# the isnotnull filter it infers from the bbox prefilter below the side
+# projection and inlines the UDF into it. A nondeterministic copy stays in
+# the projection. It must be a new UDF: asNondeterministic() flips the UDF
+# it is called on, and st_bbox elsewhere needs the deterministic one (a
+# nondeterministic bbox over st_geomfromtext re-runs the WKT parse).
+_SIDE_BBOX_UDF = F.pandas_udf(
+    _wkb_bbox_udf.func, _wkb_bbox_udf.returnType
+).asNondeterministic()
 
 
 def _cells(b: Column, cell_size: float, pad: float = 0.0) -> Column:
@@ -111,7 +126,7 @@ def spatial_join(
     )
     def _side_cols(gid: str, geom: str, meta, side: str):
         cols = [F.col(gid).alias(f"__{side}id"),
-                st_bbox(geom, meta).alias(f"__{side}box")]
+                _st_bbox_build(F.col(geom), meta, _SIDE_BBOX_UDF).alias(f"__{side}box")]
         if carry_geom:
             cols.insert(1, F.col(geom).alias(f"__{side}geom"))
         return tuple(cols)
@@ -126,8 +141,10 @@ def spatial_join(
         ("sj_side", right_id, right_geom, right_meta, carry_geom, "r"),
         lambda: _side_cols(right_id, right_geom, right_meta, "r"),
     )
-    lb = left.select(*lcols).filter(F.col("__lbox").isNotNull())
-    rb = right.select(*rcols).filter(F.col("__rbox").isNotNull())
+    # null bboxes need no filter: their cell array is null, and explode
+    # emits no row for it
+    lb = left.select(*lcols)
+    rb = right.select(*rcols)
 
     lcell, rcell = cached_columns(
         ("sj_cells", float(cell_size), pad),

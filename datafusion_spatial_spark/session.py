@@ -4,6 +4,18 @@ Local testing runs on ``local[N]`` but every default here is chosen to also
 be sane on a multi-executor cluster: AQE on (runtime re-plan, skew-join
 splitting, partition coalescing), Arrow on (pandas-UDF batches are the only
 Python hot path), UTC session timezone (oracle comparability).
+
+Python workers fork from the package daemon ``datafusion_spatial_spark._daemon``
+(``spark.python.daemon.module``). Every Python task calls
+``importlib.invalidate_caches()``; on CPython < 3.12 that eagerly re-reads
+the central directory of ``pyspark.zip`` once per zipimporter — 14–16 of
+them, one per pyspark subpackage plus the py4j zip — about 0.14 s per worker
+per task, paid by every WKB ST_* call and join refine. The daemon re-reads an
+archive only when it changed. Workers must therefore be able to import this
+package (the UDF bodies import its kernels, so they already had to); pass
+``{"spark.python.daemon.module": "pyspark.daemon"}`` through ``extra_confs``
+to run the stock daemon. The daemon deliberately does not preload
+pandas/pyarrow before forking: that could move the workers' peak RSS.
 """
 
 from __future__ import annotations
@@ -28,6 +40,9 @@ DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Quiet, non-interactive local runs.
     "spark.ui.enabled": "false",
+    # Python workers fork from the package daemon: it keeps the per-task
+    # importlib.invalidate_caches() from re-reading pyspark.zip (_daemon).
+    "spark.python.daemon.module": "datafusion_spatial_spark._daemon",
 }
 
 

@@ -6,7 +6,8 @@
 * tables.register_views: the skip re-validates against the live catalog
   (an outside dropTempView is repaired) and the _VIEWS dict stays
   maintained while the relation cache is disabled.
-* exprcache: bounded (FIFO cap) and keyed on the active SparkContext.
+* exprcache: bounded (FIFO cap) and keyed on the active SparkContext; the
+  first insert under a restarted context purges the stopped one's entries.
 * dedup.connected_components: the small-graph driver fast path is gated
   on id types whose Python ordering provably matches Spark's —
   float/double ids (NaN-capable) take the distributed loop.
@@ -87,6 +88,43 @@ def test_exprcache_hit_returns_same_object(spark):
     b = exprcache.cached_columns(("r16-hit",), lambda: F.lit(2))
     assert a is b  # second build never ran
     exprcache._CACHE.clear()
+
+
+_RESTART = """
+from pyspark import SparkContext
+from pyspark.sql import functions as F
+from datafusion_spatial_spark import exprcache
+from datafusion_spatial_spark.session import get_spark
+
+spark = get_spark(app_name="exprcache-restart", master="local[1]")
+for i in range(3):
+    exprcache.cached_columns(("old", i), lambda i=i: F.lit(i))
+old = SparkContext._active_spark_context
+spark.stop()
+spark = get_spark(app_name="exprcache-restart", master="local[1]")
+assert SparkContext._active_spark_context is not old
+exprcache.cached_columns(("new",), lambda: F.lit(9))
+assert set(exprcache._CACHE) == {("new",)}, sorted(exprcache._CACHE)
+spark.stop()
+print("OK")
+"""
+
+
+def test_exprcache_insert_purges_dead_context_entries():
+    """One cache-miss insert under a restarted context drops every entry of
+    the stopped one (not only when the cache is full or a key collides).
+    Runs in its own interpreter: stopping the suite's shared session would
+    break the tests after this one."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g", PYTHONPATH=os.pathsep.join(
+        [repo] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]))
+    out = subprocess.run([sys.executable, "-c", _RESTART], env=env, cwd=repo,
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0 and out.stdout.strip().endswith("OK"), out.stderr[-3000:]
 
 
 # --- CC fast-path id-type gating ------------------------------------------

@@ -140,6 +140,49 @@ def test_spatial_join_points_in_polygons(spark):
     assert got == want
 
 
+def test_spatial_join_wkb_sides_run_bbox_udf_once(spark):
+    """A WKB x WKB join evaluates each side's bbox UDF in one
+    ArrowEvalPython node (not a second copy under a pushed-down isnotnull
+    filter), null geometries on either side still drop out, and st_bbox
+    elsewhere stays deterministic."""
+    import random
+    import re
+
+    def wkb_of(text):
+        return bytearray(wkb.dumps(wkb.from_wkt(text)))
+
+    rng = random.Random(7)
+    pts = [(i, rng.uniform(0, 100), rng.uniform(0, 100)) for i in range(300)]
+    pts_df = spark.createDataFrame(
+        [(i, wkb_of(f"POINT ({x} {y})")) for i, x, y in pts] + [(-1, None)],
+        "pid long, geom binary",
+    )
+    polys = {1: (0, 30), 2: (50, 90)}
+    zones_df = spark.createDataFrame(
+        [(g, wkb_of(f"POLYGON (({a} {a}, {b} {a}, {b} {b}, {a} {b}, {a} {a}))"))
+         for g, (a, b) in polys.items()] + [(-1, None)],
+        "zid long, geom binary",
+    )
+    out = spatial_join(
+        zones_df, pts_df, "geom", "geom",
+        GeometryMeta("WKB", ("Polygon",)), GeometryMeta("WKB", ("Point",)),
+        "zid", "pid", cell_size=20.0, predicate="contains",
+    )
+    got = {(r.zid, r.pid) for r in out.collect()}
+    want = {(g, i) for i, x, y in pts for g, (a, b) in polys.items()
+            if a < x < b and a < y < b}
+    assert got == want
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("Initial Plan")[0]  # AQE prints both plans
+    assert len(re.findall(r"ArrowEvalPython \[_wkb_bbox_udf", final)) == 2, final
+    # st_bbox outside the join keeps its deterministic UDF (over
+    # st_geomfromtext a nondeterministic one re-runs the WKT parse)
+    from datafusion_spatial_spark.functions.scalar import st_bbox
+
+    bbox_plan = zones_df.select(st_bbox("geom", WKB_META))._jdf.queryExecution()
+    assert bbox_plan.analyzed().deterministic()
+
+
 def test_buffer_style_parameters(spark):
     """PostGIS buffer styles through the column and SQL surfaces:
     flat/square caps and mitre/bevel joins hit their closed forms
